@@ -187,13 +187,13 @@ def weighted_pagerank(
     per-edge weight = Σ of the temporal property ``weight`` over the
     edge's events, contribution = score · w(u,v) / out_strength(u),
     teleport ``(1-d)/n``, and sink redistribution ``d·Σ_sinks score/n``
-    (pagerank.rs:104-123) — sinks here are nodes with zero out-strength.
+    (pagerank.rs:104-123) — sinks here are nodes with out-strength ≤ 0.
 
-    Fixed ``max_iter`` supersteps (deterministic, SQL-replayable).  The
-    sink mass rides the superstep plan as a broadcast one-row aggregate of
-    the SAME cached state — no extra driver action, and no sink×n message
-    blow-up (the SQL oracle at test scale uses the explicit sink→all-nodes
-    arm; the engine never materialises it).
+    Fixed ``max_iter`` supersteps (deterministic, SQL-replayable) of the
+    shared PageRank loop (``pagerank.pagerank_on_ids`` with a ``w`` edge
+    column).  The sink mass rides the loop's one-row stats aggregate — no
+    sink×n message blow-up (the SQL oracle at test scale uses the explicit
+    sink→all-nodes arm; the engine never materialises it).
 
     ``damping=1.0`` turns the teleport off entirely, making this the
     power iteration of the row-normalised weighted transition matrix with
@@ -203,14 +203,10 @@ def weighted_pagerank(
     """
     if weight not in graph.edges_t.columns:
         raise ValueError(f"weight property {weight!r} not found on edges")
+    from linkgraph.algorithms.pagerank import pagerank_on_ids
     from linkgraph.graph import name_to_id
 
-    spark = graph.spark
     ids = graph.ids().persist()
-    n = ids.count()
-    if n == 0:
-        return ids.select("name", "id", F.lit(0.0).alias("score"))
-
     e_w = (
         graph.edges_t.groupBy("src", "dst")
         .agg(F.sum(F.col(weight).cast("double")).alias("w"))
@@ -220,74 +216,17 @@ def weighted_pagerank(
             "w",
         )
     )
-    # a node whose summed out-weight is <= 0 (possible with zero/negative
-    # weight properties) cannot normalise its contributions (w/0 -> NULL
-    # would silently drop its mass): treat it as a SINK so its mass is
-    # redistributed like any other dangling node
-    strength = (
-        e_w.groupBy(F.col("src_id").alias("id"))
-        .agg(F.sum("w").alias("s"))
-        .filter(F.col("s") > 0)
+    scores = pagerank_on_ids(
+        graph.spark,
+        ids.select("id"),
+        e_w,
+        max_iter=max_iter,
+        tol=0.0,
+        damping=damping,
+        partitions=partitions,
+        pre_deduped=True,
     )
-    wmsgs = (
-        e_w.join(strength.withColumnRenamed("id", "src_id"), "src_id")
-        .select(
-            F.col("src_id").alias("from_id"),
-            F.col("dst_id").alias("to_id"),
-            (F.col("w") / F.col("s")).alias("wt"),
-        )
-        .unionByName(
-            ids.select(
-                F.col("id").alias("from_id"),
-                F.col("id").alias("to_id"),
-                F.lit(0.0).alias("wt"),
-            )
-        )
-        .persist()
-    )
-    sinks = ids.select("id").join(strength, "id", "left_anti").persist()
-    sinks.count()
-
-    P = partitions or pick_partitions(spark, wmsgs.count())
-    d = float(damping)
-    with iteration_conf(spark, shuffle_partitions=P):
-        raw = wmsgs
-        wmsgs = raw.repartition(P, "from_id").sortWithinPartitions("from_id").persist()
-        wmsgs.count()
-        raw.unpersist()
-
-        init = ids.select("id", F.lit(1.0 / n).alias("score")).repartition(P, "id")
-        loop = SuperstepLoop(spark)
-        state, start_it = loop.begin(init)
-        for it in range(start_it, max_iter + 1):
-            sink_mass = state.join(F.broadcast(sinks), "id", "left_semi").agg(
-                F.coalesce(F.sum("score"), F.lit(0.0)).alias("sm")
-            )
-            recv = (
-                wmsgs.join(
-                    state.select(F.col("id").alias("from_id"), "score"), "from_id"
-                )
-                .groupBy(F.col("to_id").alias("id"))
-                .agg(F.sum(F.col("wt") * F.col("score")).alias("recv"))
-                .crossJoin(F.broadcast(sink_mass))
-                .select(
-                    "id",
-                    (
-                        F.lit((1.0 - d) / n)
-                        + F.lit(d) * (F.col("recv") + F.col("sm") / F.lit(float(n)))
-                    ).alias("score"),
-                )
-            )
-            recv = loop.stage(recv, it)
-            state = loop.commit(it)
-        out = state.select("id", "score").localCheckpoint(eager=True)
-        wmsgs.unpersist()
-        sinks.unpersist()
-    res = ids.join(out, "id", "left").select(
-        "name", "id", F.coalesce("score", F.lit(0.0)).alias("score")
-    )
-    ids.unpersist()
-    return res
+    return ids.join(scores, "id").select("name", "id", "score")
 
 
 def decayed_pagerank(
@@ -311,11 +250,13 @@ def decayed_pagerank(
     the cross-engine hash compare for zero analytical gain.
 
     ``t_max`` is one scalar aggregate over the event table (a driver
-    roundtrip before the loop, like PageRank's node count).
+    roundtrip before the loop, like PageRank's node count).  The node set
+    is the view's, so nodes without events are sinks, as in
+    :func:`weighted_pagerank`.
     """
     tmax = graph.edges_t.agg(F.max("time")).first()[0]
     if tmax is None:
-        return graph.ids().select("name", "id", F.lit(0.0).alias("score"))
+        tmax = 0  # no events: no edge to weigh, every node is a sink
     decayed = graph.edges_t.withColumn(
         "_decay_w",
         F.pow(
@@ -323,7 +264,7 @@ def decayed_pagerank(
             F.expr(f"({int(tmax)}L - time) div {int(halflife_ms)}L").cast("double"),
         ),
     )
-    g2 = LinkGraph(decayed)
+    g2 = LinkGraph(decayed, graph.nodes_t)
     return weighted_pagerank(
         g2, "_decay_w", max_iter=max_iter, damping=damping, partitions=partitions
     )

@@ -334,7 +334,7 @@ def ppr_sweep_cut(
     community_conductance` convention): ``vol(k) = Σ_prefix deg``,
     ``cut(k) = vol(k) − 2·internal(k)``, emitted as integer ppm.
 
-    Scale shape: the PPR run is the superstep kernel (one join + one
+    Scale shape: the PPR run is the shared PageRank loop (one join + one
     aggregate per iteration); the sweep itself touches only the k-row
     prefix — degrees join k rows, internal-edge counting joins the edge
     table against the k-row rank map twice (two broadcast joins at any

@@ -32,12 +32,18 @@ Spark-first execution, designed for ~10^9 nodes / 10^11 edges:
   aggregate per superstep (a co-partitioned no-exchange join against the
   previous state inside the same action that fills the staged cache), so
   each iteration costs one driver roundtrip.
+
+The same loop (:func:`pagerank_on_ids`) runs the whole family: personalized
+PageRank (teleport to a seed distribution ``p``), weighted PageRank and the
+Markov stationary iteration (edge weights ``w``, ``damping=1``), and — via
+``centrality.decayed_pagerank`` — time-decayed PageRank.
 """
 
 from __future__ import annotations
 
 import math
 import time as _time
+import warnings
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -57,6 +63,7 @@ DAMPING_DEFAULT = 0.85
 # the only plan that survives, and it is the one benchmarked at 160M edges in
 # BENCH.md.
 DRIVER_KERNEL_MAX = 20_000_000
+KERNELS = ("auto", "local", "superstep")
 
 
 def pagerank(
@@ -93,20 +100,17 @@ def pagerank(
     memory-poor clusters). Above it, both sides stay co-partitioned.
 
     ``kernel``: ``"superstep"`` — the distributed BSP loop over the sorted
-    co-partitioned edge cache; ``"blocks"`` — the distributed BSP loop over
-    hash-partitioned CSR adjacency blocks (Arrow arrays inside a cogrouped
-    pandas kernel — the north-star layout; same superstep dataflow, the
-    join+aggregate replaced by gather+bincount); ``"local"`` — gather the
-    (deduplicated) edge list once and run the whole power iteration as a
-    vectorized numpy kernel on the driver, identical semantics; ``"auto"``
-    (default) — ``local`` when the graph fits ``DRIVER_KERNEL_MAX`` and no
-    checkpointing was requested, else ``superstep`` (the JVM sort-merge
-    path — measured faster than ``blocks`` per superstep on this image; the
-    CSR-block path is the layout the north rule names and stays selectable
-    for clusters where Arrow-batch gather beats the shuffle).  All kernels
-    implement
-    pagerank.rs:54-183 exactly and are cross-checked in
+    co-partitioned edge cache; ``"local"`` — gather the (deduplicated)
+    edge list once and run the whole power iteration as a vectorized numpy
+    kernel on the driver, identical semantics; ``"auto"`` (default) —
+    ``local`` when the graph fits ``DRIVER_KERNEL_MAX`` and no
+    checkpointing was requested, else ``superstep``.  Both kernels
+    implement pagerank.rs:54-183 exactly and are cross-checked in
     tests/test_pagerank.py.
+
+    Convergence: ``iters_out`` receives ``iterations``, ``converged`` and
+    ``final_delta``; a run with ``tol > 0`` that exhausts ``max_iter``
+    first emits a ``RuntimeWarning`` (see :func:`pagerank_on_ids`).
     """
     ids = graph.ids().persist()
     if ids.limit(1).count() == 0:
@@ -144,7 +148,8 @@ def contribution_messages(
     in tests/test_plan_shape.py builds its asserted plan through this exact
     function so a refactor that reintroduces an edge-side exchange fails CI.
     ``edges`` must be hash-partitioned (and ideally sorted) on ``src_id``;
-    ``state_df`` carries (id, score, out_degree)."""
+    ``state_df`` carries (id, score, out_degree).  Weighted edges carry a
+    ``w`` column, and ``out_degree`` then holds the out-strength ``Σ w``."""
     # contrib precomputed per NODE on the build side (one division per
     # node, not per edge)
     ranks = state_df.filter(F.col("out_degree") > 0).select(
@@ -152,10 +157,11 @@ def contribution_messages(
     )
     if use_broadcast:
         ranks = F.broadcast(ranks)
+    msg = F.col("contrib") * F.col("w") if "w" in edges.columns else F.col("contrib")
     return (
         edges.join(ranks, edges.src_id == ranks.id)
         .groupBy(F.col("dst_id").alias("id"))
-        .agg(F.sum("contrib").alias("msum"))
+        .agg(F.sum(msg).alias("msum"))
     )
 
 
@@ -181,12 +187,38 @@ def pagerank_on_ids(
     """Id-native PageRank core over ``nodes(id)`` + ``edge_ids(src_id, dst_id)``;
     returns ``(id, score)``.  Pass ``pre_deduped=True`` when the edge table is
     already simple (distinct) to skip one shuffle.  ``init_scores`` warm-
-    starts the iteration (see :func:`pagerank`)."""
-    ids = nodes.select("id")
-    n = ids.count()
-    if n == 0:
-        return ids.select("id", F.lit(0.0).alias("score"))
+    starts the iteration (see :func:`pagerank`).
 
+    The one power-iteration loop of the PageRank family,
+    ``x ← d·Aᵀ_W(x/strength) + (1−d+d·sink_mass)·p``, read from two
+    optional input columns:
+
+    - ``w`` on ``edge_ids`` — edge weights: ``strength(u) = Σ w`` over u's
+      out-edges replaces the out-degree, and a node with ``strength ≤ 0``
+      is a sink whose out-edges carry no mass (a NULL weight carries none
+      either).  Rows of one pair add up; ``pre_deduped=False`` first drops
+      exact duplicate ``(src_id, dst_id, w)`` rows;
+    - ``p`` on ``nodes`` — the teleport AND sink-return distribution (it
+      should sum to 1), in place of the uniform ``1/n``; the iteration
+      starts from ``p`` instead of ``1/n``.
+
+    Without either column this is exactly pagerank.rs:54-183.
+
+    ``iters_out`` receives ``iterations`` (the last superstep run),
+    ``converged`` and ``final_delta`` (the last ``Σ|Δ|`` or ``sqrt(ΣΔ²)``,
+    per ``norm``).  With ``tol > 0``, running out of ``max_iter`` before
+    ``final_delta ≤ tol·n`` emits a ``RuntimeWarning``; pass ``tol=0.0``
+    for a fixed number of supersteps."""
+    if kernel not in KERNELS:
+        raise ValueError(f"kernel must be one of {KERNELS}, got {kernel!r}")
+    personalized = "p" in nodes.columns
+    weighted = "w" in edge_ids.columns
+    nodes = nodes.select("id", "p") if personalized else nodes.select("id")
+    n = nodes.count()
+    if n == 0:
+        return nodes.select("id", F.lit(0.0).alias("score"))
+
+    edge_ids = edge_ids.select("src_id", "dst_id", *(["w"] if weighted else []))
     raw_edges = (edge_ids if pre_deduped else edge_ids.distinct()).persist()
     n_edges = raw_edges.count()
     if kernel == "auto":
@@ -197,11 +229,12 @@ def pagerank_on_ids(
             else "superstep"
         )
     if kernel == "local":
-        out = _pagerank_local(
-            spark, ids, raw_edges, n, max_iter, tol, norm, damping, iters_out,
+        out, diff = _pagerank_local(
+            spark, nodes, raw_edges, n, max_iter, tol, norm, damping, iters_out,
             init_scores,
         )
         raw_edges.unpersist()
+        _report_convergence(iters_out, diff, tol, n, max_iter)
         return out
     from linkgraph.superstep import pick_partitions
 
@@ -211,42 +244,30 @@ def pagerank_on_ids(
     # on get AQE-wrapped plans whose within-partition ordering Catalyst can't
     # see, resurrecting per-superstep sorts.
     with iteration_conf(spark, shuffle_partitions=P):
-        use_blocks = kernel == "blocks"
-        if use_blocks:
-            # north-star layout: hash-partitioned CSR adjacency blocks as
-            # Arrow arrays — packed ONCE, cached pre-partitioned + pre-sorted
-            # on blk so the per-superstep cogroup never re-exchanges the
-            # (fat) block rows
-            blocks = (
-                _build_pr_blocks(raw_edges, P)
-                .repartition(P, "blk")
-                .sortWithinPartitions("blk")
-                .persist()
-            )
-            blocks.count()
-            edges = raw_edges  # degree/fingerprint source; unpersisted below
-        else:
-            # partition AND pre-sort within partitions: the per-superstep
-            # contribution join is a sort-merge join of two cached
-            # co-partitioned sides — with the cache already sorted on the
-            # join key, Catalyst elides the big-side Sort every iteration
-            # (only the small freshly-aggregated message side sorts).
-            #
-            edges = (
-                raw_edges.repartition(P, "src_id")
-                .sortWithinPartitions("src_id")
-                .persist()
-            )
-            edges.count()
-            raw_edges.unpersist()
-        deg = (
-            edges.groupBy(F.col("src_id").alias("id"))
-            .agg(F.count("*").alias("out_degree"))
+        # partition AND pre-sort within partitions: the per-superstep
+        # contribution join is a sort-merge join of two cached
+        # co-partitioned sides — with the cache already sorted on the
+        # join key, Catalyst elides the big-side Sort every iteration
+        # (only the small freshly-aggregated message side sorts).
+        edges = (
+            raw_edges.repartition(P, "src_id")
+            .sortWithinPartitions("src_id")
+            .persist()
         )
-        # static per-node table: (id, out_degree) — partitioned by id once
+        edges.count()
+        raw_edges.unpersist()
+        by_src = edges.groupBy(F.col("src_id").alias("id"))
+        if weighted:
+            # out-strength in the out_degree slot; a non-positive strength
+            # cannot normalise its contributions, so it is clamped to the
+            # sink value 0 (contribution_messages drops a sink's edges)
+            s = F.sum("w")
+            deg = by_src.agg(F.when(s > 0, s).otherwise(0.0).alias("out_degree"))
+        else:
+            deg = by_src.agg(F.count("*").alias("out_degree"))
+        # static per-node table: (id, out_degree[, p]) — partitioned by id once
         static = (
-            ids.select("id")
-            .join(deg, "id", "left")
+            nodes.join(deg, "id", "left")
             .fillna(0, subset=["out_degree"])
             .repartition(P, "id")
             .sortWithinPartitions("id")
@@ -254,9 +275,9 @@ def pagerank_on_ids(
         )
         n_sinks = static.filter(F.col("out_degree") == 0).count()
 
-        teleport = (1.0 - damping) / n
         if init_scores is None:
-            init = static.withColumn("score", F.lit(1.0 / n))
+            seed = F.col("p") if personalized else F.lit(1.0 / n)
+            init = static.select("id", "out_degree", seed.alias("score"))
         else:
             # warm start: project onto this node set, seed absentees with
             # the uniform 1/n, renormalise to total mass 1 (the iteration's
@@ -267,28 +288,25 @@ def pagerank_on_ids(
             )
             total = float(seeded.agg(F.sum("s0")).first()[0])
             init = seeded.select(
-                *static.columns, (F.col("s0") / F.lit(total)).alias("score")
+                "id", "out_degree", (F.col("s0") / F.lit(total)).alias("score")
             )
 
         store = CheckpointStore(spark, checkpoint_dir) if checkpoint_dir else None
         if store is not None:
             # fingerprint the input + config so a stale checkpoint from
-            # another graph is refused instead of silently resumed
-            edge_sum = edges.agg(
-                F.sum(F.xxhash64("src_id", "dst_id").bitwiseAND(F.lit(0xFFFFFFFF)))
-            ).first()[0]
-            # only trajectory-affecting facts: tol/norm may legitimately
-            # change between a killed run and its resume
+            # another graph is refused instead of silently resumed; only
+            # trajectory-affecting facts: tol/norm may legitimately change
+            # between a killed run and its resume
             meta = {
                 "algorithm": "pagerank",
                 "n_nodes": n,
-                "edge_checksum": int(edge_sum or 0),
+                "edge_checksum": _checksum(edges),
                 "damping": damping,
             }
+            if personalized:
+                meta["p_checksum"] = _checksum(nodes)
             store.validate_meta(meta)
             store.write_meta(meta)
-        if use_blocks:
-            raw_edges.unpersist()  # blocks + static are materialized; done
         loop = SuperstepLoop(
             spark, store=store, resume=resume, checkpoint_every=checkpoint_every
         )
@@ -303,163 +321,77 @@ def pagerank_on_ids(
             sink_mass = 0.0
 
         use_broadcast = n <= broadcast_threshold
-
-        # Both kernels return messages as (id, msum).  The convergence delta
-        # joins the staged state against the previous one — a co-partitioned
-        # SHJ over the two caches in the SAME single action that materializes
-        # the staged cache (stage(materialize=False)), so each superstep
-        # still costs one driver roundtrip.  Threading prev_score through
-        # the message aggregate instead was measured strictly worse at 160M
-        # edges (the extra exchange column + per-edge branch cost ~30% at
-        # local[4] and ~12% at local[16]): the 20M-row state join is cheap
-        # next to the 160M-row message stage, and it lives in the stats
-        # query, not the staged plan, so lineage stays linear.
-        if use_blocks:
-            def msgs_of(state_df, _blocks=blocks, _P=P):
-                state_b = state_df.select(
-                    F.pmod(F.xxhash64("id"), F.lit(_P)).cast("int").alias("blk"),
-                    "id",
-                    "score",
-                )
-                partials = (
-                    state_b.groupBy("blk")
-                    .cogroup(_blocks.groupBy("blk"))
-                    .applyInPandas(_pr_block_step, "id long, msum double")
-                )
-                # per-block bincount already combined per distinct dst, so
-                # this groupBy only merges ≤P partials per id
-                return partials.groupBy("id").agg(F.sum("msum").alias("msum"))
-        else:
-            def msgs_of(state_df, _edges=edges, _bc=use_broadcast):
-                return contribution_messages(_edges, state_df, _bc)
-
         if timings_out is not None:
             timings_out.append(("setup", _time.monotonic() - _t_setup))
-        state = _run_loop(
-            spark, loop, state, msgs_of, static, n, n_sinks, sink_mass, damping,
-            teleport, norm, tol, max_iter, start_it, iters_out, timings_out,
+        state, diff = _run_loop(
+            loop, state, edges, use_broadcast, static, n, sink_mass, damping,
+            personalized, norm, tol, max_iter, start_it, iters_out, timings_out,
         )
         # release the loop-scoped caches: the final state cache is already
         # materialized (the last superstep's stats action filled it), so
         # dropping its upstream relations only trades a cold recompute for
         # not accumulating fat cached relations across repeated calls in
         # one session
-        if use_blocks:
-            blocks.unpersist()
-        else:
-            edges.unpersist()
+        edges.unpersist()
         static.unpersist()
 
+    _report_convergence(iters_out, diff, tol, n, max_iter)
     return state.select("id", "score")
 
 
-def _pack_pr_block(pdf):
-    """Pack one src-hash block of the edge table into CSR Arrow arrays —
-    the distributed analogue of the reference's per-shard sorted adjacency
-    (core/storage/mod.rs:29-33, adjset.rs:16-28): ``src_ids`` sorted unique,
-    ``indptr`` row offsets, ``dst_idx`` an int32 code per edge into the
-    block-local ``dst_uniq`` dictionary.  The dictionary encoding is what
-    makes the per-superstep message fold a ``bincount`` (map-side combine
-    over the block's distinct destinations) instead of a hash aggregation.
-    """
-    import numpy as np
-    import pandas as pd
-
-    src = pdf["src_id"].to_numpy(np.int64)
-    dst = pdf["dst_id"].to_numpy(np.int64)
-    order = np.lexsort((dst, src))
-    src, dst = src[order], dst[order]
-    src_ids, starts = np.unique(src, return_index=True)
-    indptr = np.append(starts, src.size).astype(np.int64)
-    dst_uniq, dst_idx = np.unique(dst, return_inverse=True)
-    return pd.DataFrame(
-        {
-            "blk": [int(pdf["blk"].iloc[0])],
-            "src_ids": [src_ids],
-            "indptr": [indptr],
-            "dst_uniq": [dst_uniq],
-            "dst_idx": [dst_idx.astype(np.int32)],
-        }
-    )
+def _checksum(df: DataFrame) -> int:
+    """Order-insensitive fold of every row (32-bit terms so the ANSI long
+    sum cannot overflow below 2^31 rows)."""
+    total = df.agg(
+        F.sum(F.xxhash64(*df.columns).bitwiseAND(F.lit(0xFFFFFFFF)))
+    ).first()[0]
+    return int(total or 0)
 
 
-def _build_pr_blocks(edge_ids: DataFrame, num_blocks: int) -> DataFrame:
-    """Deduped edges → one CSR row per src-hash block (north-star layout:
-    salted, hash-partitioned CSR adjacency blocks as Arrow arrays inside
-    grouped pandas UDFs).  Blocking by src means every out-edge of a node
-    lands in one block, so out-degrees are block-local facts (``indptr``
-    diffs) and the score vector shards cleanly by the same hash."""
-    return (
-        edge_ids.select(
-            F.pmod(F.xxhash64("src_id"), F.lit(num_blocks)).cast("int").alias("blk"),
-            "src_id",
-            "dst_id",
+def _report_convergence(iters_out, diff, tol, n, max_iter) -> None:
+    """The convergence contract, shared by both kernels: record the outcome
+    in ``iters_out`` and never let a ``tol``-bounded run stop silently
+    short of it (``diff`` is None when no superstep ran)."""
+    converged = diff is not None and diff <= tol * n
+    if iters_out is not None:
+        iters_out["converged"] = converged
+        iters_out["final_delta"] = diff
+    if tol > 0 and not converged:
+        warnings.warn(
+            f"PageRank stopped at max_iter={max_iter} before converging: "
+            f"delta {diff} > tol·n = {tol * n:g}; raise max_iter, or pass "
+            "tol=0.0 to run a fixed number of supersteps",
+            RuntimeWarning,
+            stacklevel=3,
         )
-        .groupBy("blk")
-        .applyInPandas(
-            _pack_pr_block,
-            "blk int, src_ids array<long>, indptr array<long>, "
-            "dst_uniq array<long>, dst_idx array<int>",
-        )
-    )
-
-
-def _pr_block_step(state_pdf, block_pdf):
-    """One block's superstep: gather this block's src scores (searchsorted
-    against the co-grouped state shard), scale by out-degree, scatter-add
-    per distinct destination with ``bincount``.  Emits the block's partial
-    message sums ``(id, msum)`` — already combined per dst, so the global
-    merge shuffles at most one row per (block, dst).
-
-    Stray endpoints keep join semantics: a src absent from the state shard
-    contributes 0, an unknown dst still gets a partial (dropped later by the
-    left join onto the node table)."""
-    import numpy as np
-    import pandas as pd
-
-    if block_pdf.shape[0] == 0 or state_pdf.shape[0] == 0:
-        return pd.DataFrame(
-            {"id": pd.Series(dtype="int64"), "msum": pd.Series(dtype="float64")}
-        )
-    row = block_pdf.iloc[0]
-    src_ids = np.asarray(row["src_ids"], dtype=np.int64)
-    indptr = np.asarray(row["indptr"], dtype=np.int64)
-    dst_uniq = np.asarray(row["dst_uniq"], dtype=np.int64)
-    dst_idx = np.asarray(row["dst_idx"], dtype=np.int32)
-    sid = state_pdf["id"].to_numpy(np.int64)
-    sc = state_pdf["score"].to_numpy(np.float64)
-    o = np.argsort(sid)
-    sid, sc = sid[o], sc[o]
-    pos = np.minimum(np.searchsorted(sid, src_ids), sid.size - 1)
-    score_src = np.where(sid[pos] == src_ids, sc[pos], 0.0)
-    counts = np.diff(indptr)
-    per_edge = np.repeat(score_src / counts, counts)
-    msum = np.bincount(dst_idx, weights=per_edge, minlength=dst_uniq.size)
-    return pd.DataFrame({"id": dst_uniq, "msum": msum})
 
 
 def _pagerank_local(
-    spark, ids, edges, n, max_iter, tol, norm, damping, iters_out=None,
+    spark, nodes, edges, n, max_iter, tol, norm, damping, iters_out=None,
     init_scores=None,
-) -> DataFrame:
-    """Gathered-CSR power iteration — pagerank.rs:54-183 semantics, one
-    driver-side numpy pass instead of ``max_iter`` DataFrame jobs.
+) -> tuple[DataFrame, float | None]:
+    """Gathered-CSR power iteration — the superstep kernel's semantics, one
+    driver-side numpy pass instead of ``max_iter`` DataFrame jobs; returns
+    the scores and the last superstep's delta.
 
-    The edge list arrives as two int64 arrays over Arrow (one job), every
+    The edge list arrives as int64 arrays over Arrow (one job), every
     superstep is two ``bincount`` scatters, and the result ships back as one
     Arrow batch.  Bounded by ``DRIVER_KERNEL_MAX`` (~160 MB/array); the
-    superstep kernel above is the identical-semantics scale path.  Stray
-    edges whose endpoint is outside ``ids`` behave exactly as the
+    superstep kernel is the identical-semantics scale path.  Stray
+    edges whose endpoint is outside ``nodes`` behave exactly as the
     distributed joins treat them: an unknown dst still absorbs its src's
     out-degree share (the mass is lost), an unknown src contributes
     nothing."""
     import numpy as np
     import pandas as pd
 
-    id_sorted = np.sort(ids.toPandas()["id"].to_numpy(np.int64))
-    e = edges.select("src_id", "dst_id").toPandas()
+    nd = nodes.toPandas().sort_values("id")
+    id_sorted = nd["id"].to_numpy(np.int64)
+    p = nd["p"].to_numpy(np.float64) if "p" in nd.columns else None
+    e = edges.toPandas()
     src_raw = e["src_id"].to_numpy(np.int64)
     dst_raw = e["dst_id"].to_numpy(np.int64)
+    w = e["w"].fillna(0.0).to_numpy(np.float64) if "w" in e.columns else None
 
     def _lookup(vals):
         pos = np.searchsorted(id_sorted, vals)
@@ -469,12 +401,15 @@ def _pagerank_local(
 
     src, src_ok = _lookup(src_raw)
     dst, dst_ok = _lookup(dst_raw)
-    # out-degree counts every distinct out-edge of a known src (even to an
-    # unknown dst — join-semantics parity with the superstep kernel)
-    out_deg = np.bincount(src[src_ok], minlength=n).astype(np.float64)
+    # out-degree (out-strength with weights) counts every distinct out-edge
+    # of a known src, even to an unknown dst — join-semantics parity with
+    # the superstep kernel
+    out_deg = np.bincount(
+        src[src_ok], weights=None if w is None else w[src_ok], minlength=n
+    ).astype(np.float64)
     both = src_ok & dst_ok
     src_m, dst_m = src[both], dst[both]
-    sinks = out_deg == 0.0
+    sinks = out_deg <= 0.0
     safe_deg = np.where(sinks, 1.0, out_deg)
 
     score = np.full(n, 1.0 / n)
@@ -485,50 +420,63 @@ def _pagerank_local(
         pos, ok = _lookup(prev["id"].to_numpy(np.int64))
         score[pos[ok]] = prev["score"].to_numpy(np.float64)[ok]
         score = score / float(score.sum())
+    elif p is not None:
+        score = p.copy()
     teleport = (1.0 - damping) / n
+    diff = None
     for it in range(1, max_iter + 1):
         if iters_out is not None:
             iters_out["iterations"] = it
         contrib = np.where(sinks, 0.0, score / safe_deg)
-        msum = np.bincount(dst_m, weights=contrib[src_m], minlength=n)
+        msg = contrib[src_m] if w is None else contrib[src_m] * w[both]
+        msum = np.bincount(dst_m, weights=msg, minlength=n)
         sink_mass = float(score[sinks].sum())
-        new = damping * msum + (teleport + damping * sink_mass / n)
+        if p is None:
+            new = damping * msum + (teleport + damping * sink_mass / n)
+        else:
+            new = damping * msum + (1.0 - damping + damping * sink_mass) * p
         d = np.abs(new - score)
         diff = float(np.sqrt(float((d * d).sum()))) if norm == "l2" else float(d.sum())
         score = new
         if diff <= tol * n:
             break
-    return spark.createDataFrame(pd.DataFrame({"id": id_sorted, "score": score}))
+    return spark.createDataFrame(pd.DataFrame({"id": id_sorted, "score": score})), diff
 
 
 def _run_loop(
-    spark, loop, state, msgs_of, static, n, n_sinks, sink_mass, damping,
-    teleport, norm, tol, max_iter, start_it, iters_out=None,
+    loop, state, edges, use_broadcast, static, n, sink_mass, damping,
+    personalized, norm, tol, max_iter, start_it, iters_out=None,
     timings_out=None,
 ):
+    """The superstep kernel's iterations; returns the final state and the
+    last superstep's delta (None when none ran)."""
+    teleport = (1.0 - damping) / n
+    diff = None
     for it in range(start_it, max_iter + 1):
         _t_it = _time.monotonic()
         if iters_out is not None:
             iters_out["iterations"] = it
-        msgs = msgs_of(state)
-        sink_term = damping * sink_mass / n
+        msgs = contribution_messages(edges, state, use_broadcast)
+        pushed = F.lit(damping) * F.coalesce(F.col("msum"), F.lit(0.0))
+        if personalized:
+            score = pushed + F.lit(1.0 - damping + damping * sink_mass) * F.col("p")
+        else:
+            score = pushed + F.lit(teleport + damping * sink_mass / n)
         # join against the STATIC leaf cache (the state plan is referenced
         # once per iteration, in msgs — linear lineage)
-        new_state = (
-            static.join(msgs, "id", "left")
-            .select(
-                "id",
-                "out_degree",
-                (
-                    F.lit(damping) * F.coalesce(F.col("msum"), F.lit(0.0))
-                    + F.lit(teleport + sink_term)
-                ).alias("score"),
-            )
+        new_state = static.join(msgs, "id", "left").select(
+            "id", "out_degree", score.alias("score")
         )
         new_state = loop.stage(new_state, it, materialize=False)
         # one-row aggregate: convergence delta vs prev + next sink mass, in
         # the same action that fills the staged cache (the prev-state join
-        # is co-partitioned SHJ over two caches — no exchange)
+        # is co-partitioned SHJ over two caches — no exchange).  Threading
+        # prev_score through the message aggregate instead was measured
+        # strictly worse at 160M edges (the extra exchange column + per-edge
+        # branch cost ~30% at local[4] and ~12% at local[16]): the 20M-row
+        # state join is cheap next to the 160M-row message stage, and it
+        # lives in the stats query, not the staged plan, so lineage stays
+        # linear.
         delta_expr = (
             F.sum(F.pow(F.abs(F.col("score") - F.col("prev_score")), 2))
             if norm == "l2"
@@ -554,7 +502,7 @@ def _run_loop(
             timings_out.append((it, _time.monotonic() - _t_it))
         if diff <= tol * n:
             break
-    return state
+    return state, diff
 
 
 def personalized_pagerank(
@@ -572,102 +520,45 @@ def personalized_pagerank(
     uniform over the seeds — both the teleport and the dangling-node mass
     return to the seed distribution, the standard personalized semantics
     (the global variant in :func:`pagerank` is the special case p =
-    uniform).  L1 convergence at ``tol·n`` like the global kernel.
+    uniform).  The iteration starts from ``p``; L1 convergence at
+    ``tol·n`` like the global kernel.
 
-    Scale shape: identical to the superstep kernel — the per-iteration
-    plan is :func:`contribution_messages` (ONE co-partitioned join + one
-    aggregate over the cached pre-partitioned edge table) plus the static
-    join carrying the per-node teleport column; state is cut per
-    superstep (PPR runs are seed-query-sized; for 100 TB checkpointed
-    runs use ``pagerank`` + a post-hoc seed projection or extend the
-    CheckpointStore path the same way).
+    Scale shape: the shared loop of :func:`pagerank_on_ids` with ``p`` as a
+    node column — the ``auto`` size switch picks the driver-local kernel
+    below ``DRIVER_KERNEL_MAX``, else the superstep kernel, whose
+    per-iteration plan is :func:`contribution_messages` (ONE co-partitioned
+    join + one aggregate over the cached pre-partitioned edge table) plus
+    the static join carrying ``p``, under ``SuperstepLoop``'s lineage
+    policy.
     """
     from linkgraph.graph import name_to_id
-    from linkgraph.superstep import pick_partitions
 
-    spark = graph.spark
     ids = graph.ids().persist()
     n = ids.count()
     if n == 0 or not seeds:
         return ids.select("name", "id", F.lit(0.0).alias("score")).limit(0)
-    edge_ids = graph.edge_ids().persist()
-    n_edges = edge_ids.count()
-    P = partitions or pick_partitions(spark, n_edges)
-
     seed_lits = F.array(*[name_to_id(F.lit(s)) for s in set(seeds)])
+    is_seed = F.array_contains(seed_lits, F.col("id"))
     # resolve the seeds BEFORE splitting the teleport mass: a misspelled /
     # absent seed must not silently shrink total teleport below 1 and
     # deflate every score
-    n_seeds = ids.filter(F.array_contains(seed_lits, F.col("id"))).count()
+    n_seeds = ids.filter(is_seed).count()
     if n_seeds < len(set(seeds)):
         missing = len(set(seeds)) - n_seeds
         raise ValueError(
             f"personalized_pagerank: {missing} of {len(set(seeds))} seed "
             f"name(s) do not resolve to nodes of this graph view"
         )
-    with iteration_conf(spark, shuffle_partitions=P):
-        edges = (
-            edge_ids.repartition(P, "src_id")
-            .sortWithinPartitions("src_id")
-            .persist()
-        )
-        outdeg = edge_ids.groupBy(F.col("src_id").alias("id")).agg(
-            F.count("*").alias("out_degree")
-        )
-        static = (
-            ids.select("id")
-            .join(outdeg, "id", "left")
-            .select(
-                "id",
-                F.coalesce("out_degree", F.lit(0)).alias("out_degree"),
-                F.when(
-                    F.array_contains(seed_lits, F.col("id")),
-                    F.lit(1.0 / n_seeds),
-                )
-                .otherwise(F.lit(0.0))
-                .alias("pvec"),
-            )
-            .repartition(P, "id")
-            .sortWithinPartitions("id")
-            .persist()
-        )
-        state = static.select(
-            "id", "out_degree", F.col("pvec").alias("score"), "pvec"
-        ).localCheckpoint(eager=True)
-        sink_mass = (
-            state.filter(F.col("out_degree") == 0)
-            .agg(F.sum("score"))
-            .first()[0]
-            or 0.0
-        )
-        for _ in range(max_iter):
-            msgs = contribution_messages(edges, state)
-            new_state = static.join(msgs, "id", "left").select(
-                "id",
-                "out_degree",
-                (
-                    F.lit(damping) * F.coalesce(F.col("msum"), F.lit(0.0))
-                    + F.lit(1.0 - damping + damping * sink_mass) * F.col("pvec")
-                ).alias("score"),
-                "pvec",
-            ).localCheckpoint(eager=True)
-            stats = (
-                new_state.join(
-                    state.select("id", F.col("score").alias("prev_score")), "id"
-                )
-                .agg(
-                    F.sum(F.abs(F.col("score") - F.col("prev_score"))).alias("d"),
-                    F.sum(
-                        F.when(F.col("out_degree") == 0, F.col("score"))
-                    ).alias("sink"),
-                )
-                .first()
-            )
-            state = new_state
-            sink_mass = stats["sink"] or 0.0
-            if (stats["d"] or 0.0) <= tol * n:
-                break
-        edges.unpersist()
-        static.unpersist()
-    edge_ids.unpersist()
-    return ids.join(state.select("id", "score"), "id").select("name", "id", "score")
+    p = F.when(is_seed, F.lit(1.0 / n_seeds)).otherwise(F.lit(0.0))
+    scores = pagerank_on_ids(
+        graph.spark,
+        ids.select("id", p.alias("p")),
+        graph.edge_ids(),
+        max_iter=max_iter,
+        tol=tol,
+        norm="l1",
+        damping=damping,
+        partitions=partitions,
+        pre_deduped=True,
+    )
+    return ids.join(scores, "id").select("name", "id", "score")

@@ -7,6 +7,7 @@ hand-computed golden on a graph small enough to verify by eye.
 """
 
 import datetime as dt
+import importlib
 
 import numpy as np
 import pytest
@@ -429,6 +430,26 @@ def test_decayed_pagerank_matches_numpy(spark):
         x = 0.05 + 0.85 * (contrib + sink_mass / 3)
     for n in nodes:
         assert got[n] == pytest.approx(x[idx[n]], rel=1e-12)
+
+
+@pytest.mark.parametrize(
+    "case",
+    [
+        test_weighted_pagerank_matches_numpy,
+        test_weighted_pagerank_uniform_weights_equals_pagerank,
+        test_markov_stationary_via_weighted_pagerank,
+        test_decayed_pagerank_matches_numpy,
+    ],
+    ids=["weighted", "uniform_weights", "markov_stationary", "decayed"],
+)
+def test_pagerank_variants_superstep_kernel(spark, monkeypatch, case):
+    """The numpy-reference tests above run on the driver-local kernel that
+    ``auto`` picks at this size; replay each on the superstep kernel, same
+    tolerances."""
+    monkeypatch.setattr(
+        importlib.import_module("linkgraph.algorithms.pagerank"), "DRIVER_KERNEL_MAX", 0
+    )
+    case(spark)
 
 
 def test_degree_and_component_histograms(spark):

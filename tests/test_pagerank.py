@@ -1,3 +1,4 @@
+import importlib
 import math
 import random
 
@@ -8,6 +9,9 @@ from linkgraph.graph import LinkGraph
 
 from tests import fixtures as FX
 from tests.oracles import pagerank_oracle
+
+# the package re-exports the pagerank FUNCTION under the module's name
+pagerank_mod = importlib.import_module("linkgraph.algorithms.pagerank")
 
 
 def run_pr(spark, edges, **kw):
@@ -27,7 +31,7 @@ def test_five_edge_golden(spark):
     assert_close(got, FX.FIVE_EDGE_PAGERANK, 5)
 
 
-@pytest.mark.parametrize("kernel", ["local", "superstep", "blocks"])
+@pytest.mark.parametrize("kernel", ["local", "superstep"])
 def test_gen_graph_golden(spark, kernel):
     """python/tests/test_algorithms.py:232-246 — allclose 1e-6 gate,
     on BOTH the gathered-CSR kernel and the distributed superstep loop."""
@@ -64,7 +68,7 @@ def test_scores_sum_to_one(spark):
 
 @pytest.mark.parametrize(
     "seed,kernel",
-    [(7, "local"), (7, "superstep"), (7, "blocks"), (101, "local"), (101, "superstep"), (101, "blocks")],
+    [(7, "local"), (7, "superstep"), (101, "local"), (101, "superstep")],
 )
 def test_randomized_vs_oracle(spark, seed, kernel):
     """Quickcheck-style: random digraphs must match the numpy oracle that
@@ -113,25 +117,6 @@ def test_checkpoint_resume(spark, tmp_path):
     lin = store.lineage().toPandas()
     assert set(lin.columns) == {"partition_id", "iteration", "rows", "checksum", "wall_ms"}
     assert lin.iteration.max() >= 4  # resumed past the killed run
-
-
-def test_checkpoint_resume_across_kernels(spark, tmp_path):
-    """The CSR-block kernel shares checkpoint layout + meta fingerprint with
-    the superstep kernel: a run killed under "blocks" resumes under
-    "superstep" (and the resumed trajectory converges to the golden)."""
-    g = LinkGraph.from_edge_list(spark, FX.GEN_GRAPH)
-    ckpt = str(tmp_path / "pr_ckpt_blocks")
-    pagerank(g, max_iter=3, tol=0.0, checkpoint_dir=ckpt, kernel="blocks")
-    g2 = LinkGraph.from_edge_list(spark, FX.GEN_GRAPH)
-    resumed = {
-        r.name: r.score
-        for r in pagerank(
-            g2, max_iter=20, norm="l2", checkpoint_dir=ckpt, resume=True,
-            kernel="superstep",
-        ).collect()
-    }
-    for k, v in FX.GEN_GRAPH_PAGERANK.items():
-        assert math.isclose(resumed[k], v, abs_tol=1e-6), (k, resumed[k], v)
 
 
 def test_personalized_pagerank_matches_local_power_iteration(spark):
@@ -210,3 +195,95 @@ def test_warm_start_projects_and_renormalises(spark):
     assert out["b"] == pytest.approx(30.0 / total)
     assert out["c"] == pytest.approx((1.0 / n) / total)
     assert sum(out.values()) == pytest.approx(1.0)
+
+
+@pytest.fixture(params=["local", "superstep"])
+def family_kernel(request, monkeypatch):
+    """Runs a test under each PageRank kernel: ``auto`` picks ``local`` at
+    test scale, so a zero size budget forces the superstep kernel."""
+    if request.param == "superstep":
+        monkeypatch.setattr(pagerank_mod, "DRIVER_KERNEL_MAX", 0)
+    return request.param
+
+
+def test_personalized_pagerank_superstep_kernel(spark, monkeypatch):
+    monkeypatch.setattr(pagerank_mod, "DRIVER_KERNEL_MAX", 0)
+    test_personalized_pagerank_matches_local_power_iteration(spark)
+
+
+def test_blocks_kernel_removed(spark):
+    g = LinkGraph.from_edge_list(spark, FX.TWO_CYCLE)
+    with pytest.raises(ValueError, match="kernel must be one of"):
+        pagerank(g, kernel="blocks")
+
+
+def test_convergence_contract(spark, family_kernel, recwarn):
+    g = LinkGraph.from_edge_list(spark, FX.GEN_GRAPH)
+    n = g.ids().count()
+
+    short: dict = {}
+    with pytest.warns(RuntimeWarning, match="before converging"):
+        pagerank(g, max_iter=2, tol=1e-12, iters_out=short)
+    assert short["iterations"] == 2
+    assert short["converged"] is False
+    assert short["final_delta"] > 1e-12 * n
+
+    recwarn.clear()
+    fixed: dict = {}
+    pagerank(g, max_iter=2, tol=0.0, iters_out=fixed)
+    full: dict = {}
+    pagerank(g, max_iter=500, tol=1e-9, norm="l1", iters_out=full)
+    assert not [w for w in recwarn if "before converging" in str(w.message)]
+    assert fixed["converged"] is False and fixed["iterations"] == 2
+    assert full["converged"] is True
+    assert full["final_delta"] <= 1e-9 * n
+    assert full["iterations"] < 500
+
+
+FAMILY = ["pagerank", "personalized_pagerank", "weighted_pagerank", "decayed_pagerank"]
+
+
+def _run_family(alg, g, seeds):
+    from linkgraph.algorithms import (
+        decayed_pagerank,
+        personalized_pagerank,
+        weighted_pagerank,
+    )
+
+    if alg == "pagerank":
+        return pagerank(g, max_iter=50, tol=0.0)
+    if alg == "personalized_pagerank":
+        return personalized_pagerank(g, seeds, max_iter=50, tol=0.0)
+    if alg == "weighted_pagerank":
+        return weighted_pagerank(g, "qty", max_iter=50)
+    return decayed_pagerank(g, halflife_ms=100, max_iter=50)
+
+
+EDGE_SCHEMA = "src string, dst string, time long, qty double"
+
+
+@pytest.mark.parametrize("case", ["empty", "self_loop", "all_sinks"])
+@pytest.mark.parametrize("alg", FAMILY)
+def test_family_degenerate_inputs(spark, family_kernel, alg, case):
+    """Empty graph → typed empty result; one self-loop node → 1.0; every
+    node a sink → uniform 1/n (zero weights for the weighted variant, a
+    node-only graph for the others; PPR seeds every node)."""
+    if case == "empty":
+        g = LinkGraph(spark.createDataFrame([], EDGE_SCHEMA))
+        res = _run_family(alg, g, ["a"])
+        assert dict(res.dtypes)["score"] == "double"
+        assert res.count() == 0
+        return
+    if case == "self_loop":
+        g = LinkGraph(spark.createDataFrame([("a", "a", 0, 1.0)], EDGE_SCHEMA))
+        want = {"a": 1.0}
+    elif alg == "weighted_pagerank":
+        zero = [("a", "b", 0, 0.0), ("b", "c", 1, 0.0), ("c", "a", 2, 0.0)]
+        g = LinkGraph(spark.createDataFrame(zero, EDGE_SCHEMA))
+        want = {v: 1.0 / 3 for v in "abc"}
+    else:
+        nodes = spark.createDataFrame([(v, 0) for v in "abc"], "name string, time long")
+        g = LinkGraph(spark.createDataFrame([], EDGE_SCHEMA), nodes)
+        want = {v: 1.0 / 3 for v in "abc"}
+    got = {r["name"]: r["score"] for r in _run_family(alg, g, list(want)).collect()}
+    assert got == pytest.approx(want, abs=1e-12)

@@ -40,9 +40,9 @@ ITERS = int(os.environ.get("SCALING_ITERS", 24))
 REPS = int(os.environ.get("SCALING_REPS", 1))
 LO = int(os.environ.get("SCALING_LO", 4))
 HI = int(os.environ.get("SCALING_HI", 4 * LO))
-# "superstep" (shipped default at scale) or "blocks" (gathered-CSR Arrow
-# kernel — the north-star adjacency layout) for an at-scale kernel A/B
-KERNEL = os.environ.get("SCALING_KERNEL", "superstep")
+# the distributed kernel: "auto" would pick the driver-local one below
+# DRIVER_KERNEL_MAX, which measures one core, not scaling
+KERNEL = "superstep"
 # N and 4N parallelism levels (within physical cores: the sandbox VM
 # advertises 32 vCPUs but sustained all-core throughput tops out near ~20
 # cores-worth, so 8->32 measures the host, not us).  A second pair at
