@@ -26,7 +26,21 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
+# sized to the host: $SPARK_GRAFT_CPUS, else the cores this process may use
+CPUS = os.environ.get("SPARK_GRAFT_CPUS") or str(len(os.sched_getaffinity(0)))
+
+
+def _driver_memory() -> str:
+    """A quarter of MemAvailable, rounded down to a power of two between 1
+    and 4 GB, so the heap (and with it GC behaviour) stays put as the
+    available figure drifts."""
+    with open("/proc/meminfo") as fh:
+        info = {ln.split(":")[0]: int(ln.split()[1]) for ln in fh}
+    quarter_mb = info["MemAvailable"] // 1024 // 4
+    mb = 1024
+    while mb * 2 <= min(4096, quarter_mb):
+        mb *= 2
+    return f"{mb}m"
 
 
 def _force(df) -> int:
@@ -60,7 +74,8 @@ def main() -> None:
     from linkgraph.algorithms import pagerank
     from linkgraph.session import get_spark
 
-    spark = get_spark(cores=CPUS, driver_memory="24g")
+    driver_memory = _driver_memory()
+    spark = get_spark(cores=CPUS, driver_memory=driver_memory)
     sf = float(SF_DIR.rstrip("/").rsplit("sf", 1)[-1]) if "sf" in SF_DIR else -1.0
 
     timings: dict[str, float] = {}
@@ -356,6 +371,7 @@ def main() -> None:
             n_edges * max(sup_steps, 1) / sup_wall, 1
         ),
         "cores": CPUS,
+        "driver_memory": driver_memory,
     }
     if single_rep:
         out["budget_single_rep"] = single_rep

@@ -22,6 +22,7 @@ must preserve min-id labels.
 from __future__ import annotations
 
 import sys
+import warnings
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -61,7 +62,9 @@ def weakly_connected_components(
     windows / append-only ingestion; after deletions run cold instead
     (a departed minimum would leak a stale label).  Forces the
     superstep kernel.  ``iters_out['iterations']`` reports the
-    superstep count when a dict is passed.
+    superstep count when a dict is passed, and on the superstep kernel
+    ``iters_out['converged']`` whether the fixpoint was reached; a run
+    that exhausts ``max_iter`` first emits a ``RuntimeWarning``.
     """
     spark = graph.spark
 
@@ -394,6 +397,7 @@ def condensation(graph: LinkGraph, labels: DataFrame | None = None) -> DataFrame
 
 
 def _run_loop(loop, state, und, it, max_iter, use_broadcast, iters_out=None):
+    changed = None  # stays None when no superstep runs (resumed past max_iter)
     while it <= max_iter:
         if iters_out is not None:
             iters_out["iterations"] = it
@@ -426,6 +430,18 @@ def _run_loop(loop, state, und, it, max_iter, use_broadcast, iters_out=None):
         it += 1
         if changed == 0:
             break
+    # the convergence contract, as pagerank._report_convergence: record the
+    # outcome and never stop silently short of the fixpoint
+    converged = changed == 0
+    if iters_out is not None:
+        iters_out["converged"] = converged
+    if not converged:
+        warnings.warn(
+            f"WCC stopped at max_iter={max_iter} before converging: "
+            f"{changed} labels still changing; raise max_iter",
+            RuntimeWarning,
+            stacklevel=3,
+        )
     return state
 
 

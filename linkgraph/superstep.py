@@ -12,16 +12,17 @@ Job::Check at :176-184, morcel size 16k at :229). Our analogue:
 - a tiny one-row aggregate collected to the driver decides convergence;
 - lineage is truncated so the logical plan doesn't grow unboundedly across
   iterations (persist each state, ``localCheckpoint`` every few supersteps);
-- per the north rule, vertex state checkpoints to a table per superstep with
-  a lineage row ``(partition_id, iteration, rows, checksum, wall_ms)``
-  (checksum observed during the write — no readback) so any run resumes
-  from the last completed iteration, and convergence deltas are emitted as
-  metrics (``metrics.jsonl``).
+- per the north rule, vertex state checkpoints to a parquet snapshot per
+  superstep, then a lineage row ``(partition_id, iteration, rows, checksum,
+  wall_ms)`` commits it (checksum observed during the snapshot write — no
+  readback), so any run resumes from the last completed iteration, and
+  convergence deltas are emitted as metrics (``metrics.jsonl``).
 
-The checkpoint store targets Iceberg when an Iceberg catalog is on the
-classpath (``df.writeTo(table)``); this sandbox image has no Iceberg jars,
-so the same layout is written as parquet snapshot directories — identical
-interface, per-snapshot atomic commit via the lineage append.
+The snapshot is one observed Spark write.  The lineage row is written by the
+driver as a one-row parquet file, committed by an atomic rename from a
+hidden temp name: a Spark job for one row costs more than the snapshot it
+marks, and the store already needs a driver-visible path (it writes
+``meta.json`` and ``metrics.jsonl`` with ``open()``).
 """
 
 from __future__ import annotations
@@ -29,6 +30,7 @@ from __future__ import annotations
 import json
 import os
 import time as _time
+import uuid
 from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, Observation, SparkSession
@@ -96,21 +98,12 @@ LINEAGE_SCHEMA = (
 )
 
 
-def _iceberg_available(spark: SparkSession) -> bool:
-    try:
-        ext = spark.conf.get("spark.sql.extensions", "") or ""
-    except Exception:
-        ext = ""
-    return "Iceberg" in ext
-
-
 class CheckpointStore:
     """Per-superstep vertex-state checkpoints with lineage + resume."""
 
     def __init__(self, spark: SparkSession, path: str):
         self.spark = spark
         self.path = path.rstrip("/")
-        self.use_iceberg = _iceberg_available(spark)
         os.makedirs(self.path, exist_ok=True)
 
     # -- layout ----------------------------------------------------------
@@ -154,14 +147,19 @@ class CheckpointStore:
 
     # -- write -----------------------------------------------------------
     def save(self, df: DataFrame, iteration: int, metrics: dict | None = None) -> None:
-        """Write state snapshot, then lineage rows (the commit marker).
+        """Write the state snapshot, then its lineage row (the commit marker).
 
-        Lineage checksum is an order-insensitive 64-bit fold (sum of
-        xxhash64 over all columns) collected via ``observe()`` DURING the
-        parquet write — one Spark job per save, no readback of the files
-        just written.  ``partition_id`` is ``-1``: the fold is global (the
-        per-save serial cost must stay independent of N, and observed
+        The snapshot is one Spark parquet write.  The lineage checksum is an
+        order-insensitive 64-bit fold (sum of xxhash64 over all columns)
+        collected via ``observe()`` DURING that write — no readback of the
+        files just written.  ``partition_id`` is ``-1``: the fold is global
+        (the per-save serial cost must stay independent of N, and observed
         metrics cannot be split per output partition).
+
+        The lineage row is then written on the driver, without a Spark job:
+        a one-row parquet file under a hidden temp name (Spark's reader
+        skips ``.``/``_`` files), renamed to a unique ``part-*.parquet``.
+        The rename makes the commit atomic and the unique name appends.
         """
         t0 = _time.monotonic()
         obs = Observation()
@@ -176,19 +174,25 @@ class CheckpointStore:
         )
         observed.write.mode("overwrite").parquet(self._state_path(iteration))
         got = obs.get
-        lineage = self.spark.createDataFrame(
-            [
-                (
-                    -1,
-                    iteration,
-                    int(got["rows"]),
-                    int(got["checksum"] or 0),
-                    (_time.monotonic() - t0) * 1000.0,
-                )
-            ],
-            schema=LINEAGE_SCHEMA,
+        # imported here so that runs which never checkpoint never load it
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+
+        # LINEAGE_SCHEMA in the pyarrow types Spark reads back as exactly it
+        row = pa.table(
+            {
+                "partition_id": pa.array([-1], pa.int32()),
+                "iteration": pa.array([iteration], pa.int32()),
+                "rows": pa.array([int(got["rows"])], pa.int64()),
+                "checksum": pa.array([int(got["checksum"] or 0)], pa.int64()),
+                "wall_ms": pa.array([(_time.monotonic() - t0) * 1000.0], pa.float64()),
+            }
         )
-        lineage.write.mode("append").parquet(self._lineage_path)
+        os.makedirs(self._lineage_path, exist_ok=True)
+        name = f"{iteration:05d}-{uuid.uuid4().hex}.parquet"
+        tmp = f"{self._lineage_path}/.{name}.tmp"
+        pq.write_table(row, tmp)
+        os.replace(tmp, f"{self._lineage_path}/part-{name}")
         if metrics is not None:
             self.emit_metrics({"iteration": iteration, **metrics})
 

@@ -75,6 +75,31 @@ def test_wcc_checkpoint_resume(spark, tmp_path):
     assert got == FX.WCC_TWO_COMPONENTS_EXPECTED
 
 
+def test_wcc_convergence_contract(spark, recwarn):
+    """A superstep run that exhausts max_iter with labels still changing
+    reports ``converged`` False and warns; one that reaches the fixpoint
+    reports True and stays silent."""
+    path = [(t, str(t), str(t + 1)) for t in range(1, 8)]  # 8 nodes
+    g = LinkGraph.from_edge_list(spark, path)
+    short: dict = {}
+    with pytest.warns(RuntimeWarning, match="WCC stopped at max_iter=2"):
+        weakly_connected_components(
+            g, max_iter=2, kernel="superstep", iters_out=short
+        )
+    assert short["converged"] is False
+    recwarn.clear()
+    full: dict = {}
+    got = {
+        r.name: r.component
+        for r in weakly_connected_components(
+            g, kernel="superstep", iters_out=full
+        ).collect()
+    }
+    assert set(got.values()) == {1}
+    assert full["converged"] is True
+    assert not [w for w in recwarn if "WCC stopped" in str(w.message)]
+
+
 def test_scc_reference_golden(spark):
     """components/scc.rs:180-208 — one non-trivial SCC {2,5,6,7,8}."""
     from linkgraph.graph import LinkGraph

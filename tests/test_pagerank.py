@@ -1,5 +1,6 @@
 import importlib
 import math
+import os
 import random
 
 import pytest
@@ -117,6 +118,82 @@ def test_checkpoint_resume(spark, tmp_path):
     lin = store.lineage().toPandas()
     assert set(lin.columns) == {"partition_id", "iteration", "rows", "checksum", "wall_ms"}
     assert lin.iteration.max() >= 4  # resumed past the killed run
+
+
+def test_lineage_commit_contract(spark, tmp_path):
+    """The lineage row commits each checkpointed superstep: exactly
+    LINEAGE_SCHEMA, one row per superstep, carrying the row count and
+    checksum of the snapshot on disk.  An uncommitted row (a crash between
+    writing the hidden temp file and renaming it) is invisible, and lineage
+    committed by a Spark appender reads and resumes together with
+    driver-written rows."""
+    import glob
+    import shutil
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.sql.types import StructType
+
+    from linkgraph.superstep import LINEAGE_SCHEMA, CheckpointStore
+
+    g = LinkGraph.from_edge_list(spark, FX.GEN_GRAPH)
+    n = g.ids().count()
+    ckpt = str(tmp_path / "pr_ckpt")
+    want = {
+        r.name: r.score
+        for r in pagerank(
+            g, max_iter=3, tol=0.0, kernel="superstep", checkpoint_dir=ckpt
+        ).collect()
+    }
+    store = CheckpointStore(spark, ckpt)
+    lin = store.lineage()
+    assert lin.schema == StructType.fromDDL(LINEAGE_SCHEMA)
+    rows = lin.orderBy("iteration").collect()
+    assert [r.iteration for r in rows] == [1, 2, 3]
+    for r in rows:
+        assert r.partition_id == -1 and r.rows == n
+        assert r.checksum == pagerank_mod._checksum(store.load(r.iteration))
+    assert store.last_completed() == 3
+
+    # crash before the rename: a hidden temp file holding iteration 4
+    part = sorted(glob.glob(f"{ckpt}/lineage/part-*.parquet"))[-1]
+    crashed = pq.read_table(part)
+    crashed = crashed.set_column(
+        1, "iteration", pa.array([4], crashed.schema.field("iteration").type)
+    )
+    pq.write_table(crashed, f"{ckpt}/lineage/.00004-crashed.parquet.tmp")
+    assert store.last_completed() == 3
+    assert store.lineage().count() == 3
+    # ... and before the first commit: nothing to resume from
+    fresh = str(tmp_path / "fresh")
+    os.makedirs(f"{fresh}/lineage")
+    shutil.copy(
+        f"{ckpt}/lineage/.00004-crashed.parquet.tmp",
+        f"{fresh}/lineage/.00001-crashed.parquet.tmp",
+    )
+    assert CheckpointStore(spark, fresh).last_completed() is None
+
+    # lineage committed by a Spark appender, one parquet job per row
+    old = str(tmp_path / "old_ckpt")
+    pagerank(g, max_iter=2, tol=0.0, kernel="superstep", checkpoint_dir=old)
+    old_rows = CheckpointStore(spark, old).lineage().collect()
+    shutil.rmtree(f"{old}/lineage")
+    for r in old_rows:
+        spark.createDataFrame([r], schema=LINEAGE_SCHEMA).write.mode(
+            "append"
+        ).parquet(f"{old}/lineage")
+    resumed = {
+        r.name: r.score
+        for r in pagerank(
+            g, max_iter=3, tol=0.0, kernel="superstep", checkpoint_dir=old,
+            resume=True,
+        ).collect()
+    }
+    old_store = CheckpointStore(spark, old)
+    assert sorted(r.iteration for r in old_store.lineage().collect()) == [1, 2, 3]
+    assert old_store.last_completed() == 3
+    for k, v in want.items():
+        assert math.isclose(resumed[k], v, rel_tol=1e-12), (k, resumed[k], v)
 
 
 def test_personalized_pagerank_matches_local_power_iteration(spark):

@@ -16,7 +16,9 @@ a 10x wall regression at scale:
 from __future__ import annotations
 
 import re
+import warnings
 
+import pytest
 from pyspark.sql import functions as F
 
 from linkgraph.superstep import iteration_conf
@@ -209,3 +211,59 @@ def test_bowtie_bfs_round_reuses_edge_partitioning(spark):
             assert "InMemoryTableScan" in plan, plan
         finally:
             probe.unpersist()
+
+
+def _jobs_run(spark, fn) -> int:
+    """Spark jobs started by ``fn()``, counted through a job group."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"job-budget-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setJobGroup(None, None)
+    # the status tracker is fed by the listener bus, asynchronously
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+@pytest.mark.parametrize("algorithm", ["pagerank", "wcc"])
+def test_checkpointed_superstep_job_budget(spark, tmp_path, algorithm):
+    """A checkpointed superstep costs at most 4 Spark jobs.  Per-job latency,
+    not data volume, sets the superstep wall on small and medium graphs, so
+    each job is budgeted: the lineage commit row is written on the driver
+    and must not cost a one-row Spark parquet job of its own.  Jobs per
+    superstep = jobs(max_iter=k+1) − jobs(max_iter=k), so set-up jobs
+    cancel."""
+    from linkgraph.algorithms import pagerank, weakly_connected_components
+    from linkgraph.graph import LinkGraph
+    from tests import fixtures as FX
+
+    if algorithm == "pagerank":
+        edges = FX.GEN_GRAPH
+
+        def run(k, ck):
+            pagerank(
+                LinkGraph.from_edge_list(spark, edges), max_iter=k, tol=0.0,
+                kernel="superstep", checkpoint_dir=ck,
+            )
+    else:
+        # a 12-node path: both max_iter values stop before the fixpoint
+        edges = [(t, str(t), str(t + 1)) for t in range(1, 12)]
+
+        def run(k, ck):
+            with warnings.catch_warnings():  # stopping short is the point
+                warnings.simplefilter("ignore", RuntimeWarning)
+                weakly_connected_components(
+                    LinkGraph.from_edge_list(spark, edges), max_iter=k,
+                    kernel="superstep", checkpoint_dir=ck,
+                )
+
+    k = 2
+    jobs = [
+        _jobs_run(spark, lambda m=m: run(m, str(tmp_path / f"ck{m}")))
+        for m in (k, k + 1)
+    ]
+    assert jobs[1] - jobs[0] <= 4, jobs
